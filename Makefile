@@ -3,7 +3,7 @@
 # Spark engine; no mypy in this container, so the typed gate is the
 # cross-engine output-type audit instead).
 
-.PHONY: check test typecheck verify bench
+.PHONY: check test typecheck verify bench smoke
 
 # the full local gate: unit/property/plan suites + the cross-engine
 # type audit (every oracle's DuckDB DESCRIBE must match Spark dtypes —
@@ -23,3 +23,8 @@ verify:
 
 bench:
 	python bench.py
+
+# toy runs of the benchmark, untraced and traced; the traced mode patches
+# KB and Warehouse methods by name, so this catches a renamed method
+smoke:
+	python3 perfbench/smoke.py

@@ -18,7 +18,11 @@ asyncio lock           Spark's distributed execution (the reference's
                        serial lock is its scalability ceiling, §4)
 =====================  =========================================
 
-Bulk contexts commit as one atomic table swap each — the moral
+Every table gets its final layout when the KB opens, as the reference
+creates its tables at open (``_TABLE_DEFS``, ``kb.py:66-113``): docs
+and edges are bucketed from creation (``DOCS_BUCKETS``,
+``EDGES_BUCKETS``), so each mutation rewrites only the buckets it
+touches. Bulk contexts commit as one atomic write each — the moral
 equivalent of the reference's BEGIN/COMMIT transaction per bulk
 (``kb.py:794-829``). The async/sync API duality is deliberately not
 ported (no query semantics in it; SURVEY.md §7).
@@ -197,15 +201,13 @@ class KnowledgeBase:
             }
         meta["embedding_func_params"] = json.dumps(params_to_store)
         self._write_kv("_meta", meta)
-        for table, schema in (
-            ("docs", DOCS_SCHEMA),
-            ("edges", EDGES_SCHEMA),
-            ("keyval", KEYVAL_SCHEMA),
-        ):
-            if not self.wh.exists(table):
-                self.wh.write(
-                    table, self.spark.createDataFrame([], schema)
-                )
+        # docs and edges are bucketed from creation; a table written
+        # plain or with another bucket count (older warehouses) is
+        # converted here, once
+        self.wh.ensure_bucketed("docs", DOCS_SCHEMA, "id", DOCS_BUCKETS)
+        self.wh.ensure_bucketed("edges", EDGES_SCHEMA, "edge_id", EDGES_BUCKETS)
+        if not self.wh.exists("keyval"):
+            self.wh.write("keyval", self.spark.createDataFrame([], KEYVAL_SCHEMA))
 
     def _write_kv(self, table: str, kv: dict) -> None:
         rows = []
@@ -262,46 +264,44 @@ class KnowledgeBase:
     # -- docs write paths: bucketed point-update locality ---------------------
 
     def _append_docs(self, new_df: DataFrame) -> None:
-        """Append new doc rows touching only their hash buckets.
+        """Append new doc rows touching only their hash buckets: rows
+        hitting k buckets rewrite k/DOCS_BUCKETS of the table — a single
+        add_doc touches ONE bucket.
 
-        First append converts the (plain, empty-at-init) docs table to
-        the bucketed layout; afterwards an append of rows hitting k
-        buckets rewrites k/DOCS_BUCKETS of the table — a single add_doc
-        touches ONE bucket.  The distinct-bucket probe collects ≤
-        DOCS_BUCKETS rows, never data."""
-        if self.wh.bucket_meta("docs") is None:
-            self.wh.write_bucketed(
-                "docs", self.docs.unionByName(new_df), "id", DOCS_BUCKETS
-            )
-        else:
+        The rows are persisted first and the distinct-bucket probe
+        (≤ DOCS_BUCKETS rows collected, never data) materializes that
+        cache, so the embedding provider runs exactly once per doc
+        although the probe and the bucket write both read the rows."""
+        staged = new_df.select(
+            "id", "parent_id", "level", "text",
+            F.col("embedding").cast(ArrayType(FloatType())).alias("embedding"),
+            "meta",
+        ).persist()
+        try:
             pbs = [
                 r[0]
-                for r in new_df.select(
+                for r in staged.select(
                     F.pmod(F.col("id"), F.lit(DOCS_BUCKETS)).cast("int")
                 ).distinct().collect()
             ]
-            post = self.wh.read_buckets("docs", pbs).unionByName(new_df)
-            self.wh.overwrite_buckets("docs", pbs, post)
+            if pbs:
+                post = self.wh.read_buckets("docs", pbs).unionByName(staged)
+                self.wh.overwrite_buckets("docs", pbs, post)
+        finally:
+            staged.unpersist()
         self._invalidate()
 
     def _point_update_docs(self, doc_id: int, column: str, value) -> None:
-        """Rewrite exactly one doc's column, touching only its bucket
-        (full-table fallback for pre-bucketed warehouses)."""
-        bmeta = self.wh.bucket_meta("docs")
-        patch = lambda df: df.withColumn(  # noqa: E731
+        """Rewrite exactly one doc's column, touching only its bucket."""
+        pb = Warehouse.bucket_of(doc_id, DOCS_BUCKETS)
+        bucket = self.wh.read_buckets("docs", [pb])
+        if bucket.filter(F.col("id") == doc_id).first() is None:
+            raise ValueError(f"no such doc: {doc_id}")
+        patched = bucket.withColumn(
             column,
             F.when(F.col("id") == doc_id, value).otherwise(F.col(column)),
         )
-        if bmeta is not None:
-            pb = Warehouse.bucket_of(doc_id, bmeta["n_buckets"])
-            bucket = self.wh.read_buckets("docs", [pb])
-            if bucket.filter(F.col("id") == doc_id).first() is None:
-                raise ValueError(f"no such doc: {doc_id}")
-            self.wh.overwrite_buckets("docs", [pb], patch(bucket))
-        else:
-            if self.docs.filter(F.col("id") == doc_id).first() is None:
-                raise ValueError(f"no such doc: {doc_id}")
-            self.wh.write("docs", patch(self.docs))
+        self.wh.overwrite_buckets("docs", [pb], patched)
         self._invalidate()
 
     # -- DML: bulk add (M1) ---------------------------------------------------
@@ -374,24 +374,10 @@ class KnowledgeBase:
             .drop("no_embedding")
             .withColumn("embedding", F.lit(None).cast(ArrayType(FloatType())))
         )
+        # the magnitude guard runs inside embed: self.embedding_func is
+        # wrapped with it at open
         embedded = embed_df(to_embed, self.embedding_func, check=False)
-        # magnitude guard applied inside embed via the wrapped func below
-        embedded = embedded.select(
-            "id", "parent_id", "level", "text",
-            F.col("embedding").cast(ArrayType(FloatType())).alias("embedding"),
-            "meta",
-        )
-        skipped = skipped.select(
-            "id", "parent_id", "level", "text", "embedding", "meta"
-        )
-        # _append_docs runs ≥2 actions (bucket probe + write); persist so
-        # the embedding provider runs exactly once per pending doc.
-        staged = embedded.unionByName(skipped).persist()
-        try:
-            staged.count()
-            self._append_docs(staged)
-        finally:
-            staged.unpersist()
+        self._append_docs(embedded.unionByName(skipped))
 
     def add_doc(self, text: str, parent_id: Optional[int] = None,
                 meta: Optional[dict] = None, no_embedding: bool = False) -> int:
@@ -452,22 +438,7 @@ class KnowledgeBase:
             )
         else:
             staged = embed_df(new_rows, self.embedding_func, check=False)
-        staged = staged.select(
-            "id", "parent_id", "level", "text",
-            F.col("embedding").cast(ArrayType(FloatType())).alias("embedding"),
-            "meta",
-        )
-        if no_embedding:
-            self._append_docs(staged)
-        else:
-            # _append_docs runs ≥2 actions (bucket probe + write); persist
-            # the embedded frame so the provider runs exactly once/doc.
-            staged = staged.persist()
-            try:
-                staged.count()
-                self._append_docs(staged)
-            finally:
-                staged.unpersist()
+        self._append_docs(staged)
         return n_new
 
     def add_chunked_documents_df(
@@ -547,23 +518,7 @@ class KnowledgeBase:
             )
         else:
             chunks = embed_df(chunks_pre, self.embedding_func, check=False)
-        chunks = chunks.select(
-            "id", "parent_id", "level", "text",
-            F.col("embedding").cast(ArrayType(FloatType())).alias("embedding"),
-            "meta",
-        )
-        staged = parents.unionByName(chunks)
-        if no_embedding:
-            self._append_docs(staged)
-        else:
-            # _append_docs runs ≥2 actions (bucket probe + write); persist
-            # the embedded frame so the provider runs exactly once/chunk.
-            staged = staged.persist()
-            try:
-                staged.count()
-                self._append_docs(staged)
-            finally:
-                staged.unpersist()
+        self._append_docs(parents.unionByName(chunks))
         return n_parents, n_chunks
 
     # -- DML: bulk delete (M2) -------------------------------------------------
@@ -615,47 +570,34 @@ class KnowledgeBase:
                 )
             removed.add(doc_id)
         id_list = list(removed)
-        bmeta = self.wh.bucket_meta("docs")
-        if bmeta is not None:
-            # rewrite only the deleted ids' buckets (1..k of n, pruned read)
-            pbs = sorted(
-                {Warehouse.bucket_of(i, bmeta["n_buckets"]) for i in id_list}
-            )
-            post = self.wh.read_buckets("docs", pbs).filter(
-                ~F.col("id").isin(id_list)
-            )
-            self.wh.overwrite_buckets("docs", pbs, post)
-        else:
-            self.wh.write(
-                "docs", self.docs.filter(~F.col("id").isin(id_list))
-            )
+        # rewrite only the deleted ids' buckets (1..k of n, pruned read)
+        pbs = sorted({Warehouse.bucket_of(i, DOCS_BUCKETS) for i in id_list})
+        post = self.wh.read_buckets("docs", pbs).filter(
+            ~F.col("id").isin(id_list)
+        )
+        self.wh.overwrite_buckets("docs", pbs, post)
         cascade_pred = (
             F.col("src").isin(id_list)
             | F.col("dst").isin(id_list)
             | F.col("rel").isin(id_list)
         )
-        ebmeta = self.wh.bucket_meta("edges")
-        if ebmeta is not None:
-            # the cascade predicate keys on src/dst/rel, not the bucket
-            # key, so finding victims needs a full scan — but the WRITE
-            # doesn't: collect the (≤ n_buckets) distinct _pb values of
-            # matching edges and rewrite only those buckets. A delete
-            # with no incident edges rewrites nothing.
-            touched = [
-                r["_pb"]
-                for r in self.spark.read.parquet(self.wh.table_path("edges"))
-                .filter(cascade_pred)
-                .select("_pb")
-                .distinct()
-                .collect()
-            ]
-            if touched:
-                post = self.wh.read_buckets("edges", touched).filter(
-                    ~cascade_pred
-                )
-                self.wh.overwrite_buckets("edges", touched, post)
-        else:
-            self.wh.write("edges", self.edges.filter(~cascade_pred))
+        # the cascade predicate keys on src/dst/rel, not the bucket key,
+        # so finding victims needs a full scan — but the WRITE doesn't:
+        # collect the (≤ EDGES_BUCKETS) distinct buckets of matching
+        # edges and rewrite only those. A delete with no incident edges
+        # rewrites nothing.
+        touched = [
+            r[0]
+            for r in self.edges.filter(cascade_pred)
+            .select(F.pmod(F.col("edge_id"), F.lit(EDGES_BUCKETS)).cast("int"))
+            .distinct()
+            .collect()
+        ]
+        if touched:
+            post = self.wh.read_buckets("edges", touched).filter(
+                ~cascade_pred
+            )
+            self.wh.overwrite_buckets("edges", touched, post)
         self._invalidate()
 
     def del_doc(self, doc_id: int) -> None:
@@ -707,15 +649,10 @@ class KnowledgeBase:
         """Point lookup routed through the bucketed layout: the partition
         filter prunes the scan to 1/DOCS_BUCKETS of the table (plus
         parquet row-group min/max pruning on id inside the bucket)."""
-        bmeta = self.wh.bucket_meta("docs")
-        src = (
-            self.wh.read_buckets(
-                "docs", [Warehouse.bucket_of(doc_id, bmeta["n_buckets"])]
-            )
-            if bmeta is not None
-            else self.docs
+        bucket = self.wh.read_buckets(
+            "docs", [Warehouse.bucket_of(doc_id, DOCS_BUCKETS)]
         )
-        return src.filter(F.col("id") == doc_id).first()
+        return bucket.filter(F.col("id") == doc_id).first()
 
     def query_doc(self, doc_id: int, include_embedding: bool = False) -> dict:
         row = self._point_read(doc_id)
@@ -1008,19 +945,11 @@ class KnowledgeBase:
         persisted_del_ids = sorted(
             {op[1] for op in ops if op[0] == "del" and op[1] < start_eid}
         )
-        bmeta = self.wh.bucket_meta("edges")
-        del_src = (
-            self.wh.read_buckets(
-                "edges",
-                sorted(
-                    {
-                        Warehouse.bucket_of(e, bmeta["n_buckets"])
-                        for e in persisted_del_ids
-                    }
-                ),
-            )
-            if bmeta is not None and persisted_del_ids
-            else self.edges
+        del_src = self.wh.read_buckets(
+            "edges",
+            sorted(
+                {Warehouse.bucket_of(e, EDGES_BUCKETS) for e in persisted_del_ids}
+            ),
         )
         del_map = (
             {
@@ -1077,32 +1006,16 @@ class KnowledgeBase:
 
         if not adds and not dels:
             return
-        adds_df = (
-            self.spark.createDataFrame(adds, EDGES_SCHEMA) if adds else None
+        pbs = sorted(
+            {Warehouse.bucket_of(a[0], EDGES_BUCKETS) for a in adds}
+            | {Warehouse.bucket_of(e, EDGES_BUCKETS) for e in dels}
         )
-        bmeta = self.wh.bucket_meta("edges")
-        if bmeta is None:
-            # first mutation upgrades the layout (one full rewrite, same
-            # as the docs table at its first point mutation) so every
-            # later bulk touches only its edge_ids' buckets
-            df = self.edges
-            if dels:
-                df = df.filter(~F.col("edge_id").isin(list(dels)))
-            if adds_df is not None:
-                df = df.unionByName(adds_df)
-            self.wh.write_bucketed("edges", df, "edge_id", EDGES_BUCKETS)
-        else:
-            nb = bmeta["n_buckets"]
-            pbs = sorted(
-                {Warehouse.bucket_of(a[0], nb) for a in adds}
-                | {Warehouse.bucket_of(e, nb) for e in dels}
-            )
-            post = self.wh.read_buckets("edges", pbs)
-            if dels:
-                post = post.filter(~F.col("edge_id").isin(list(dels)))
-            if adds_df is not None:
-                post = post.unionByName(adds_df)
-            self.wh.overwrite_buckets("edges", pbs, post)
+        post = self.wh.read_buckets("edges", pbs)
+        if dels:
+            post = post.filter(~F.col("edge_id").isin(list(dels)))
+        if adds:
+            post = post.unionByName(self.spark.createDataFrame(adds, EDGES_SCHEMA))
+        self.wh.overwrite_buckets("edges", pbs, post)
 
     def add_edge(self, doc1: int, doc2: int, relationship: int,
                  weight: Optional[float] = None) -> int:
@@ -1163,12 +1076,13 @@ class KnowledgeBase:
 
     @contextmanager
     def bulk_keyval_update(self):
-        """kb.py:1731-1795: dict-like KV ops committed atomically.
+        """kb.py:1731-1795: dict-like KV ops committed atomically; a
+        block that only reads (no set/remove) writes nothing.
         get() default semantics (kb.py:1746-1756): missing key raises
         KeyError; an Exception-subclass default is raised; any other
         default is returned."""
         state = self._kv_all()
-        kb = self
+        changed = [False]
 
         class KV:
             def get(self, key: str, default: Any = _MISSING) -> Any:
@@ -1185,11 +1099,13 @@ class KnowledgeBase:
             def set(self, key: str, val: Any) -> None:
                 _encode_val(val)  # validate type early
                 state[key] = val
+                changed[0] = True
 
             def remove(self, key: str) -> None:
                 if key not in state:
                     raise KeyError(key)
                 del state[key]
+                changed[0] = True
 
             def has(self, key: str) -> bool:
                 return key in state
@@ -1216,7 +1132,8 @@ class KnowledgeBase:
                 return iter(sorted(state))
 
         yield KV()
-        self._write_kv("keyval", state)
+        if changed[0]:
+            self._write_kv("keyval", state)
 
 
 def _kb_register_views(self: KnowledgeBase, prefix: str = "kb") -> None:

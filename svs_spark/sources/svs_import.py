@@ -34,7 +34,8 @@ from typing import Iterator
 from pyspark.sql import SparkSession
 
 from svs_spark.kb import (
-    DOCS_SCHEMA, EDGES_SCHEMA, KEYVAL_SCHEMA, _encode_val,
+    DOCS_BUCKETS, DOCS_SCHEMA, EDGES_BUCKETS, EDGES_SCHEMA, KEYVAL_SCHEMA,
+    _encode_val,
 )
 from svs_spark.sources.warehouse import Warehouse, resolve_location
 
@@ -102,15 +103,11 @@ def import_svs_sqlite(
                 (r["id"], r["parent_id"], r["level"], r["text"], vec,
                  r["meta"])
             )
-    docs_df = spark.createDataFrame(doc_rows, DOCS_SCHEMA)
-    if doc_rows:
-        # imported KBs get the bucketed layout up front so point DML is
-        # bucket-local from the first mutation (kb.DOCS_BUCKETS)
-        from svs_spark.kb import DOCS_BUCKETS
-
-        wh.write_bucketed("docs", docs_df, "id", DOCS_BUCKETS)
-    else:
-        wh.write("docs", docs_df)
+    # docs and edges get the KB's bucketed layout (kb.DOCS_BUCKETS,
+    # kb.EDGES_BUCKETS), so point DML is bucket-local from the start
+    wh.write_bucketed(
+        "docs", spark.createDataFrame(doc_rows, DOCS_SCHEMA), "id", DOCS_BUCKETS
+    )
 
     cur = con.execute("SELECT id, a, b, r, w, d FROM edges ORDER BY id")
     edge_rows = [
@@ -118,7 +115,10 @@ def import_svs_sqlite(
         for chunk in _chunks(cur)
         for r in chunk
     ]
-    wh.write("edges", spark.createDataFrame(edge_rows, EDGES_SCHEMA))
+    wh.write_bucketed(
+        "edges", spark.createDataFrame(edge_rows, EDGES_SCHEMA), "edge_id",
+        EDGES_BUCKETS,
+    )
 
     def kv_rows(table: str) -> list[tuple]:
         out = []

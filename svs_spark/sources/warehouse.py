@@ -12,10 +12,13 @@ Point-update scale path: a table may be *bucketed* — laid out as
 point mutation (update one doc's meta/vector, delete a handful of ids)
 then reads and rewrites ONLY the touched buckets — 1/n of the table,
 with the read side pruned by the partition filter — instead of a full
-table rewrite.  This is the dependency-free analogue of what
-Delta/Iceberg MERGE does (rewrite only the files containing matched
-rows); ``merge_supported()`` probes for delta-spark so a real ACID
-MERGE can slot into the same call sites when the package is present.
+table rewrite.
+
+A table's layout is fixed when it is created: a bucketed table stays
+bucketed for its whole life. An empty bucketed table is its
+``_buckets.json`` plus one schema-only parquet file in a ``_pb=``
+directory (a partitioned write of zero rows leaves nothing readable),
+so reads and bucket rewrites never need a plain-table fallback.
 
 Remote open parity (``src/svs/util.py:97-187``): ``http(s)://`` KBs are
 downloaded once into a local cache keyed by URL sha256; ``file://`` and
@@ -35,6 +38,7 @@ import urllib.request
 import warnings
 from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 REMOTE_CACHE_DIR = ".remote_cache"
 BUCKET_META_FILE = "_buckets.json"
@@ -174,18 +178,6 @@ def path_writer_lock(
             pass
 
 
-def merge_supported() -> bool:
-    """True when delta-spark is importable — the ACID MERGE upgrade path
-    for the bucket-overwrite mutation strategy (absent in this
-    container; the call sites are shaped so MERGE slots in)."""
-    try:
-        import importlib.util
-
-        return importlib.util.find_spec("delta") is not None
-    except Exception:  # pragma: no cover
-        return False
-
-
 def resolve_location(path_or_url: str, cache_root: str = ".") -> str:
     """Resolve a KB location to a local directory path.
 
@@ -238,8 +230,8 @@ class Warehouse:
         on POSIX; on object stores the same role is played by a
         put-if-absent, which is the upgrade path when this directory
         layout moves off a filesystem. Re-entrant within one Warehouse
-        instance (merge_into holds the lock across its read-modify-
-        write and the inner overwrite_buckets acquire is then a no-op).
+        instance (a caller may hold the lock across its own read-modify-
+        write; the inner write's acquire is then a no-op).
         While held, a heartbeat thread refreshes the lock mtime, so a
         lock older than ``stale_after_s`` means the holder PROCESS is
         dead (crashed writer), not merely slow — a multi-hour rollup
@@ -264,6 +256,39 @@ class Warehouse:
         df = self.spark.read.parquet(self.table_path(name))
         return df.drop("_pb") if "_pb" in df.columns else df
 
+    # -- whole-table rewrites: staging + atomic swap ------------------------
+
+    def _swap_in(self, name: str, write_staging) -> None:
+        """Atomically replace table ``name``: ``write_staging(staging)``
+        fully materializes the new contents to <name>.staging before the
+        swap, so a failed job never corrupts the current table
+        (rollback-on-exception parity, kb.py:804-821)."""
+        with self.write_lock(name):
+            path = self.table_path(name)
+            staging = path + ".staging"
+            old = path + ".old"
+            if os.path.exists(staging):
+                shutil.rmtree(staging)
+            write_staging(staging)
+            if os.path.exists(path):
+                os.rename(path, old)
+            os.rename(staging, path)
+            if os.path.exists(old):
+                shutil.rmtree(old)
+            self._refresh_cached(path)
+
+    def _refresh_cached(self, path: str) -> None:
+        """Spark matches a cached plan by its root path, not by the files
+        under it, so a DataFrame persisted from this table by another
+        KnowledgeBase instance would keep serving the replaced rows (a
+        KB reopened with force_fresh_db at the same path saw its old
+        docs). Recache every cached plan reading ``path``."""
+        self.spark.catalog.refreshByPath(path)
+
+    def write(self, name: str, df: DataFrame) -> None:
+        """Atomically replace plain table ``name`` with ``df``."""
+        self._swap_in(name, df.write.mode("overwrite").parquet)
+
     # -- bucketed layout: point mutations touch 1/n of the table ----------
 
     def bucket_meta(self, name: str) -> dict | None:
@@ -279,45 +304,64 @@ class Warehouse:
         (xxhash64) ids too."""
         return key % n_buckets if key >= 0 else (key % n_buckets + n_buckets) % n_buckets
 
+    @staticmethod
+    def _bucket_dirs(path: str) -> set[str]:
+        return {d for d in os.listdir(path) if d.startswith("_pb=")}
+
+    @staticmethod
+    def _write_partitioned(
+        df: DataFrame, key_col: str, n_buckets: int, out: str
+    ) -> None:
+        (
+            df.withColumn(
+                "_pb", F.pmod(F.col(key_col), F.lit(n_buckets)).cast("int")
+            )
+            .repartition(F.col("_pb"))
+            .write.mode("overwrite")
+            .partitionBy("_pb")
+            .parquet(out)
+        )
+
+    @staticmethod
+    def _write_schema_only(df: DataFrame, out: str, pb: int) -> None:
+        """The one file an empty bucketed table keeps: zero rows with
+        ``df``'s schema in ``_pb=<pb>``, so the table stays readable."""
+        df.limit(0).write.parquet(os.path.join(out, f"_pb={pb}"))
+
     def write_bucketed(
         self, name: str, df: DataFrame, key_col: str, n_buckets: int
     ) -> None:
         """Atomically (re)write ``name`` partitioned by
-        ``_pb = pmod(key_col, n_buckets)``.  Bulk rewrites stay atomic
-        via the same staging+swap as ``write``; the payoff is that
-        subsequent POINT mutations go through ``overwrite_buckets`` and
-        touch only their own partitions."""
-        with self.write_lock(name):
-            path = self.table_path(name)
-            staging = path + ".staging"
-            old = path + ".old"
-            if os.path.exists(staging):
-                shutil.rmtree(staging)
-            bucketed = df.withColumn(
-                "_pb", F.pmod(F.col(key_col), F.lit(n_buckets)).cast("int")
-            )
-            (
-                bucketed.repartition(F.col("_pb"))
-                .write.mode("overwrite")
-                .partitionBy("_pb")
-                .parquet(staging)
-            )
-            if not any(
-                d.startswith("_pb=") for d in os.listdir(staging)
-            ):
-                # empty df: a partitioned write leaves no readable files, so
-                # degrade to a plain empty table (same as overwrite_buckets
-                # when every bucket empties); schema is preserved from df
-                shutil.rmtree(staging)
-                self.write(name, df.limit(0))
-                return
+        ``_pb = pmod(key_col, n_buckets)`` — empty or not, the result
+        is a bucketed table.  Bulk rewrites stay atomic via the same
+        staging+swap as ``write``; the payoff is that subsequent POINT
+        mutations go through ``overwrite_buckets`` and touch only their
+        own partitions."""
+
+        def write_staging(staging: str) -> None:
+            self._write_partitioned(df, key_col, n_buckets, staging)
+            if not self._bucket_dirs(staging):
+                self._write_schema_only(df, staging, 0)
             with open(os.path.join(staging, BUCKET_META_FILE), "w") as f:
                 json.dump({"key_col": key_col, "n_buckets": n_buckets}, f)
-            if os.path.exists(path):
-                os.rename(path, old)
-            os.rename(staging, path)
-            if os.path.exists(old):
-                shutil.rmtree(old)
+
+        self._swap_in(name, write_staging)
+
+    def ensure_bucketed(
+        self, name: str, schema: StructType, key_col: str, n_buckets: int
+    ) -> None:
+        """Give ``name`` the bucketed layout ``(key_col, n_buckets)``:
+        create it empty with ``schema`` if missing, rewrite it once if
+        it was written plain or with another layout, else do nothing."""
+        if self.bucket_meta(name) == {"key_col": key_col, "n_buckets": n_buckets}:
+            return
+        rows = (
+            self.read(name)
+            if self.exists(name)
+            else self.spark.createDataFrame([], schema)
+        )
+        self.write_bucketed(name, rows, key_col, n_buckets)
+
     def read_buckets(self, name: str, buckets: list[int]) -> DataFrame:
         """Rows of the given buckets only — the ``_pb IN (...)`` filter
         is a partition filter, so the scan never opens other buckets'
@@ -333,26 +377,24 @@ class Warehouse:
         bucket stages fully before an atomic per-partition dir swap, so
         a failed job never corrupts the table — the touched-files-only
         behavior of a lakehouse MERGE, minus cross-bucket transaction
-        isolation (documented tradeoff; see merge_supported())."""
+        isolation (documented tradeoff)."""
         with self.write_lock(name):
             meta = self.bucket_meta(name)
-            assert meta is not None, f"{name} is not bucketed"
+            if meta is None:
+                raise ValueError(f"{name} is not bucketed")
             path = self.table_path(name)
             staging = path + ".bucket_staging"
             if os.path.exists(staging):
                 shutil.rmtree(staging)
-            bucketed = df.withColumn(
-                "_pb",
-                F.pmod(F.col(meta["key_col"]), F.lit(meta["n_buckets"])).cast(
-                    "int"
-                ),
+            self._write_partitioned(
+                df, meta["key_col"], meta["n_buckets"], staging
             )
-            (
-                bucketed.repartition(F.col("_pb"))
-                .write.mode("overwrite")
-                .partitionBy("_pb")
-                .parquet(staging)
-            )
+            touched = {f"_pb={pb}" for pb in buckets}
+            if not self._bucket_dirs(staging) and (
+                self._bucket_dirs(path) <= touched
+            ):
+                # every bucket empties: keep the table bucketed and readable
+                self._write_schema_only(df, staging, buckets[0])
             for pb in buckets:
                 part = os.path.join(path, f"_pb={pb}")
                 newpart = os.path.join(staging, f"_pb={pb}")
@@ -366,69 +408,8 @@ class Warehouse:
                 if os.path.exists(oldpart):
                     shutil.rmtree(oldpart)
             shutil.rmtree(staging)
-            if not any(d.startswith("_pb=") for d in os.listdir(path)):
-                # every bucket emptied: degrade to a plain empty table so
-                # reads keep working (schema preserved from df)
-                self.write(name, df.limit(0))
-    def merge_into(
-        self,
-        name: str,
-        updates: DataFrame,
-        delete: bool = False,
-    ) -> dict:
-        """Generic bucket-pruned MERGE on a bucketed table: upsert
-        ``updates`` by the table's bucket key (replace matched rows,
-        insert unmatched), or with ``delete=True`` remove the keys in
-        ``updates``. Only the buckets actually present in ``updates``
-        are read and rewritten — the WHEN MATCHED/NOT MATCHED core of a
-        lakehouse MERGE, minus cross-bucket snapshot isolation (see
-        merge_supported() for the delta-spark upgrade path).
+            self._refresh_cached(path)
 
-        Scale shape: the touched-bucket set is a distinct over
-        ``pmod(key)`` — executor-side, collect bounded by n_buckets;
-        the anti-join runs only over those buckets' rows, and both its
-        sides hash-partition on the same key.
-        """
-        with self.write_lock(name):
-            meta = self.bucket_meta(name)
-            assert meta is not None, f"{name} is not bucketed"
-            key, nb = meta["key_col"], meta["n_buckets"]
-            pb = F.pmod(F.col(key), F.lit(nb)).cast("int")
-            touched = sorted(
-                r[0]
-                for r in updates.select(pb.alias("b")).distinct().collect()
-            )
-            if not touched:
-                return {"buckets": [], "rows_written": 0}
-            cur = self.read_buckets(name, touched)
-            kept = cur.join(updates.select(key), key, "left_anti")
-            post = kept if delete else kept.unionByName(
-                updates.select(*cur.columns)
-            )
-            # count BEFORE the swap: post's lineage reads the pre-merge
-            # files, which overwrite_buckets deletes
-            rows = post.count()
-            self.overwrite_buckets(name, touched, post)
-            return {"buckets": touched, "rows_written": rows}
-    def write(self, name: str, df: DataFrame) -> None:
-        """Atomically replace table ``name`` with ``df``.
-
-        The new contents are fully materialized to <name>.staging before
-        the swap, so a failed job never corrupts the current table
-        (rollback-on-exception parity, kb.py:804-821).
-        """
-        with self.write_lock(name):
-            path = self.table_path(name)
-            staging = path + ".staging"
-            old = path + ".old"
-            if os.path.exists(staging):
-                shutil.rmtree(staging)
-            df.write.mode("overwrite").parquet(staging)
-            if os.path.exists(path):
-                os.rename(path, old)
-            os.rename(staging, path)
-            if os.path.exists(old):
-                shutil.rmtree(old)
     def drop_all(self) -> None:
         """force_fresh_db parity (kb.py:951-952): delete + recreate."""
         if os.path.exists(self.root):

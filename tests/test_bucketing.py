@@ -64,60 +64,41 @@ def test_bucketed_aggregation_no_shuffle(spark, bucketed_tables):
     )
 
 
-class TestMergeInto:
-    def _wh(self, spark, tmp_path):
+class TestWarehouseBucketedLayout:
+    """A bucketed warehouse table stays bucketed for its whole life —
+    empty or not — and bucket rewrites refuse a plain table."""
+
+    def test_empty_bucketed_table_is_readable(self, spark, tmp_path):
         from svs_spark.sources.warehouse import Warehouse
 
         wh = Warehouse(spark, str(tmp_path / "wh"))
-        base = spark.createDataFrame(
-            [(i, f"v{i}") for i in range(40)], "k long, payload string"
+        empty = spark.createDataFrame([], "k long, payload string")
+        wh.write_bucketed("t", empty, "k", 8)
+        assert wh.bucket_meta("t") == {"key_col": "k", "n_buckets": 8}
+        got = wh.read("t")
+        assert got.count() == 0 and got.columns == ["k", "payload"]
+        wh.overwrite_buckets(
+            "t", [3], spark.createDataFrame([(3, "a")], "k long, payload string")
         )
-        wh.write_bucketed("t", base, "k", 8)
-        return wh
+        assert [tuple(r) for r in wh.read("t").collect()] == [(3, "a")]
 
-    def test_upsert_replaces_and_inserts(self, spark, tmp_path):
-        wh = self._wh(spark, tmp_path)
-        updates = spark.createDataFrame(
-            [(3, "NEW3"), (11, "NEW11"), (100, "NEW100")],
-            "k long, payload string",
-        )
-        stats = wh.merge_into("t", updates)
-        assert stats["buckets"] == [3, 4]  # pmod(3)=3, pmod(11)=3, pmod(100)=4
-        got = {r.k: r.payload for r in wh.read("t").collect()}
-        assert len(got) == 41
-        assert got[3] == "NEW3" and got[11] == "NEW11"
-        assert got[100] == "NEW100"
-        assert got[5] == "v5"  # untouched row intact
+    def test_overwrite_every_bucket_empty_keeps_layout(self, spark, tmp_path):
+        from svs_spark.sources.warehouse import Warehouse
 
-    def test_delete_removes_only_given_keys(self, spark, tmp_path):
-        wh = self._wh(spark, tmp_path)
-        dels = spark.createDataFrame([(7,), (15,)], "k long")
-        wh.merge_into("t", dels, delete=True)
-        ks = {r.k for r in wh.read("t").collect()}
-        assert 7 not in ks and 15 not in ks and len(ks) == 38
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        rows = spark.createDataFrame([(1, "a"), (2, "b")], "k long, payload string")
+        wh.write_bucketed("t", rows, "k", 8)
+        wh.overwrite_buckets("t", [1, 2], rows.limit(0))
+        assert wh.bucket_meta("t") == {"key_col": "k", "n_buckets": 8}
+        assert wh.read("t").count() == 0
+        assert wh.read_buckets("t", [1]).count() == 0
 
-    def test_merge_touches_only_matched_buckets(self, spark, tmp_path):
-        import os
+    def test_overwrite_buckets_on_plain_table_raises(self, spark, tmp_path):
+        from svs_spark.sources.warehouse import Warehouse
 
-        wh = self._wh(spark, tmp_path)
-        path = wh.table_path("t")
-
-        def inventory():
-            out = {}
-            for d in os.listdir(path):
-                if d.startswith("_pb="):
-                    sub = os.path.join(path, d)
-                    out[d] = {
-                        (f, os.stat(os.path.join(sub, f)).st_mtime_ns)
-                        for f in os.listdir(sub)
-                    }
-            return out
-
-        before = inventory()
-        updates = spark.createDataFrame([(9, "X")], "k long, payload string")
-        wh.merge_into("t", updates)
-        after = inventory()
-        assert after["_pb=1"] != before["_pb=1"]
-        for d in before:
-            if d != "_pb=1":
-                assert after[d] == before[d], f"{d} must stay byte-identical"
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        rows = spark.createDataFrame([(1, "a")], "k long, payload string")
+        wh.write("t", rows)
+        with pytest.raises(ValueError, match="not bucketed"):
+            wh.overwrite_buckets("t", [1], rows)
+        assert [tuple(r) for r in wh.read("t").collect()] == [(1, "a")]

@@ -39,6 +39,41 @@ def kw_kb(spark, tmp_path):
     )
 
 
+def _bucket_inventory(kb: KnowledgeBase, table: str) -> dict:
+    """(inode, mtime) of each ``_pb=`` dir: a rewritten bucket is a new
+    directory swapped in, so both change."""
+    import os
+
+    path = kb.wh.table_path(table)
+    out = {}
+    for d in os.listdir(path):
+        if d.startswith("_pb="):
+            st = os.stat(os.path.join(path, d))
+            out[d] = (st.st_ino, st.st_mtime_ns)
+    return out
+
+
+def _counting_embedder(log_path: str):
+    """Mock embedder that appends the size of every batch it embeds to
+    ``log_path`` (from whichever process runs it)."""
+
+    def embed(texts):
+        with open(log_path, "a") as f:
+            f.write(f"{len(texts)}\n")
+        return [[1.0, 0.0, 0.0] for _ in texts]
+
+    return embed
+
+
+def _texts_embedded(log_path) -> int:
+    import os
+
+    if not os.path.exists(log_path):
+        return 0
+    with open(log_path) as f:
+        return sum(int(line) for line in f)
+
+
 def _add_fixture_docs(kb: KnowledgeBase) -> None:
     # canonical 5-row fixture (FIXTURES.md F1 / reference test_kb.py:147-216)
     with kb.bulk_add_docs() as add:
@@ -229,10 +264,9 @@ class TestGraph:
             kb.del_edge(99)
 
     def test_point_edge_mutation_touches_only_its_bucket(self, kb):
-        """After the first mutation upgrades the edges table to the
-        bucketed layout, a point del_edge rewrites only its edge_id's
-        _pb partition — other buckets' files stay byte-identical
-        (mtime+inode untouched)."""
+        """The edges table is bucketed by edge_id, so a point del_edge
+        rewrites only its edge_id's _pb partition — other buckets'
+        files stay byte-identical (mtime untouched)."""
         import os
 
         from svs_spark.kb import EDGES_BUCKETS
@@ -410,6 +444,35 @@ class TestKeyval:
         with kb.bulk_keyval_update() as kv:
             assert kv.count() == 3
             assert sorted(kv) == ["answer", "blob", "reason"]
+
+    def test_read_only_block_writes_nothing(self, kb):
+        """A block that never calls set/remove must not rewrite keyval:
+        every file of the table keeps its inode and mtime."""
+        import os
+
+        with kb.bulk_keyval_update() as kv:
+            kv.set("answer", 42)
+        path = kb.wh.table_path("keyval")
+
+        def inventory():
+            out = {}
+            for d, _, files in os.walk(path):
+                for f in files:
+                    st = os.stat(os.path.join(d, f))
+                    out[os.path.join(d, f)] = (st.st_ino, st.st_mtime_ns)
+            return out
+
+        before = inventory()
+        with kb.bulk_keyval_update() as kv:
+            assert kv.get("answer") == 42
+            assert kv.get("missing", None) is None
+            assert kv.items() == [("answer", 42)]
+        assert inventory() == before
+        with kb.bulk_keyval_update() as kv:
+            kv.remove("answer")
+        assert inventory() != before
+        with kb.bulk_keyval_update() as kv:
+            assert kv.count() == 0
 
 
 class TestMetaGuards:
@@ -597,3 +660,188 @@ class TestBucketedDml:
         assert len(kb2) == 20
         kb2.update_doc_meta(3, {"ok": 1})
         assert kb2.query_doc(3)["meta"] == {"ok": 1}
+
+
+class TestLayout:
+    """docs and edges are bucketed when the KB is created and stay
+    bucketed; tables written in the plain layout are converted at open."""
+
+    def test_fresh_kb_is_bucketed_before_any_mutation(self, kb):
+        from svs_spark.kb import (
+            DOCS_BUCKETS, DOCS_SCHEMA, EDGES_BUCKETS, EDGES_SCHEMA,
+        )
+
+        assert kb.wh.bucket_meta("docs") == {
+            "key_col": "id", "n_buckets": DOCS_BUCKETS
+        }
+        assert kb.wh.bucket_meta("edges") == {
+            "key_col": "edge_id", "n_buckets": EDGES_BUCKETS
+        }
+
+        def shape(schema):
+            return [(f.name, f.dataType) for f in schema]
+
+        assert shape(kb.docs.schema) == shape(DOCS_SCHEMA)
+        assert shape(kb.edges.schema) == shape(EDGES_SCHEMA)
+        assert kb.count() == 0 and kb.count_edges() == 0
+
+    def test_deleting_every_doc_keeps_layout(self, kb):
+        from svs_spark.kb import DOCS_BUCKETS
+
+        with kb.bulk_add_docs() as add:
+            ids = [add(f"doc {i}") for i in range(3)]
+        kb.add_edge(ids[0], ids[1], ids[2])
+        with kb.bulk_del_docs() as dd:
+            for i in ids:
+                dd(i)
+        assert kb.wh.bucket_meta("docs") == {
+            "key_col": "id", "n_buckets": DOCS_BUCKETS
+        }
+        assert kb.count() == 0 and kb.count_edges() == 0
+        assert kb.query_level(0) == []
+        new = kb.add_doc("after the purge")
+        assert kb.count() == 1
+        assert kb.query_doc(new)["text"] == "after the purge"
+
+    def test_fresh_kb_ignores_docs_cached_by_an_older_instance(
+        self, spark, tmp_path
+    ):
+        """Spark matches a cached plan by root path, so an older KB's
+        persisted docs would answer reads of a fresh KB created at the
+        same path unless every table write refreshes that cache."""
+        path = str(tmp_path / "reused")
+        old = KnowledgeBase(
+            spark, path, embedding_params={"provider": "mock"},
+            force_fresh_db=True,
+        )
+        with old.bulk_add_docs() as add:
+            add("old one")
+            add("old two")
+        old.load()  # persists the old instance's docs view
+        try:
+            new = KnowledgeBase(
+                spark, path, embedding_params={"provider": "mock"},
+                force_fresh_db=True,
+            )
+            assert new.count() == 0
+            new.add_doc("new one")
+            assert [r["text"] for r in new.query_level(0)] == ["new one"]
+        finally:
+            old.close()
+
+    def test_plain_layout_is_converted_at_open(self, spark, tmp_path):
+        """Plain-parquet docs/edges/keyval plus _meta, as KBs were
+        written before the layout was fixed at creation: opening the KB
+        converts docs and edges once, keeping their rows; afterwards a
+        point update rewrites one bucket."""
+        import json
+
+        from svs_spark.kb import (
+            DOCS_BUCKETS, DOCS_SCHEMA, EDGES_BUCKETS, EDGES_SCHEMA,
+            KEYVAL_SCHEMA, SCHEMA_VERSION,
+        )
+        from svs_spark.sources.warehouse import Warehouse
+
+        path = str(tmp_path / "plain")
+        wh = Warehouse(spark, path)
+        wh.write("_meta", spark.createDataFrame([
+            ("schema_version", "int", json.dumps(SCHEMA_VERSION)),
+            ("embedding_func_params", "str", json.dumps({"provider": "mock"})),
+        ], KEYVAL_SCHEMA))
+        wh.write("docs", spark.createDataFrame(
+            [(i, None, 0, f"doc {i}", [1.0, 0.0, 0.0], None)
+             for i in range(1, 41)],
+            DOCS_SCHEMA,
+        ))
+        wh.write("edges", spark.createDataFrame([], EDGES_SCHEMA))
+        wh.write("keyval", spark.createDataFrame([], KEYVAL_SCHEMA))
+        assert wh.bucket_meta("docs") is None
+
+        kb = KnowledgeBase(spark, path)
+        assert kb.wh.bucket_meta("docs") == {
+            "key_col": "id", "n_buckets": DOCS_BUCKETS
+        }
+        assert kb.wh.bucket_meta("edges") == {
+            "key_col": "edge_id", "n_buckets": EDGES_BUCKETS
+        }
+        assert kb.count() == 40 and kb.count_edges() == 0
+        assert kb.query_doc(7, include_embedding=True)["embedding"] == [
+            1.0, 0.0, 0.0
+        ]
+
+        before = _bucket_inventory(kb, "docs")
+        assert len(before) == DOCS_BUCKETS
+        kb.update_doc_meta(5, {"touched": True})
+        after = _bucket_inventory(kb, "docs")
+        hot = f"_pb={Warehouse.bucket_of(5, DOCS_BUCKETS)}"
+        assert {d for d in after if after[d] != before.get(d)} == {hot}
+        assert kb.query_doc(5)["meta"] == {"touched": True}
+        # a second open finds the layout in place and rewrites nothing
+        KnowledgeBase(spark, path)
+        assert _bucket_inventory(kb, "docs") == after
+
+    def test_other_bucket_count_is_converted_at_open(self, spark, tmp_path):
+        from svs_spark.kb import EDGES_BUCKETS
+
+        path = str(tmp_path / "rebucket")
+        kb = KnowledgeBase(
+            spark, path, embedding_params={"provider": "mock"},
+            force_fresh_db=True,
+        )
+        with kb.bulk_add_docs() as add:
+            for i in range(4):
+                add(f"doc {i}")
+        kb.add_edge(1, 2, 3)
+        kb.add_edge(2, 3, 4)
+        kb.wh.write_bucketed("edges", kb.edges, "edge_id", 4)
+        kb2 = KnowledgeBase(spark, path)
+        assert kb2.wh.bucket_meta("edges") == {
+            "key_col": "edge_id", "n_buckets": EDGES_BUCKETS
+        }
+        assert sorted(
+            (r["src"], r["dst"], r["rel"]) for r in kb2.edges.collect()
+        ) == [(1, 2, 3), (2, 3, 4)]
+        kb2.del_edge(1)
+        assert kb2.count_edges() == 1
+
+
+class TestEmbedOnce:
+    """Every ingest path calls the embedding provider exactly once per
+    embedded doc, although the bucketed append reads the new rows twice
+    (bucket probe, then the bucket write)."""
+
+    def _kb(self, spark, tmp_path):
+        log = str(tmp_path / "embedded.log")
+        kb = KnowledgeBase(
+            spark, str(tmp_path / "kb"),
+            embedding_func=_counting_embedder(log), force_fresh_db=True,
+        )
+        return kb, log
+
+    def test_bulk_add_docs(self, spark, tmp_path):
+        kb, log = self._kb(spark, tmp_path)
+        _add_fixture_docs(kb)  # 5 docs, one with no_embedding
+        assert _texts_embedded(log) == 4
+        assert kb.count() == 5
+
+    def test_add_documents_df(self, spark, tmp_path):
+        kb, log = self._kb(spark, tmp_path)
+        df = spark.createDataFrame(
+            [(i, f"text {i}") for i in range(1, 8)], "doc_id long, text string"
+        )
+        assert kb.add_documents_df(df) == 7
+        assert _texts_embedded(log) == 7
+        assert kb.count() == 7
+
+    def test_add_chunked_documents_df(self, spark, tmp_path):
+        kb, log = self._kb(spark, tmp_path)
+        df = spark.createDataFrame(
+            [(i, f"document number {i} " * 4) for i in range(1, 4)],
+            "doc_id long, text string",
+        )
+        n_parents, n_chunks = kb.add_chunked_documents_df(
+            df, chunk_size=20, chunk_stride=15
+        )
+        assert n_parents == 3 and n_chunks > n_parents
+        assert _texts_embedded(log) == n_chunks
+        assert kb.count() == n_parents + n_chunks

@@ -1,8 +1,8 @@
 """Cross-process writer guard (Warehouse.write_lock): a second writer
 fails fast instead of interleaving read-modify-write cycles; stale
 locks from crashed writers are broken; the lock is re-entrant within
-one Warehouse instance so merge_into's inner overwrite_buckets acquire
-is a no-op."""
+one Warehouse instance, so a write nested inside a held lock does not
+acquire it again."""
 
 from __future__ import annotations
 
@@ -52,13 +52,16 @@ def test_stale_lock_is_broken_with_warning(spark, wh):
 
 
 def test_lock_released_after_write_and_reentrant_merge(spark, wh):
-    wh.write_bucketed("b", _df(spark, [(1, "a"), (2, "b")]), "id", 4)
+    wh.write("b", _df(spark, [(1, "a"), (2, "b")]))
     lock = wh.table_path("b") + WRITER_LOCK_SUFFIX
     assert not os.path.exists(lock)
-    # merge_into holds the lock across its read-modify-write; the
-    # nested overwrite_buckets acquire must not deadlock
-    out = wh.merge_into("b", _df(spark, [(2, "B"), (5, "e")]))
-    assert out["rows_written"] == 3
+    # a caller holds the lock across its own read-modify-write; the
+    # nested write's acquire must not deadlock
+    with wh.write_lock("b"):
+        assert os.path.exists(lock)
+        cur = wh.read("b").filter("id != 2").collect()
+        wh.write("b", _df(spark, [tuple(r) for r in cur] + [(2, "B"), (5, "e")]))
+        assert os.path.exists(lock)  # the inner write did not release it
     got = {(r["id"], r["v"]) for r in wh.read("b").collect()}
     assert got == {(1, "a"), (2, "B"), (5, "e")}
     assert not os.path.exists(lock)
